@@ -221,11 +221,12 @@ def ngram_jaccard_pairs(
     """Candidate near-duplicate pairs ``(doc_a, doc_b, jaccard)`` with
     ``doc_a < doc_b`` and n-gram Jaccard ≥ ``threshold``.
 
-    EAGER + NON-RECOVERABLE: the result (and the intermediate shingle
-    frame) is ``localCheckpoint``-ed at call time — no CacheManager entry
-    is ever created (cache-hygiene contract — see ``lsh_candidate_pairs``);
-    executor loss invalidates the returned frame, and callers composing
-    larger pipelines should treat this call as a materialization barrier.
+    EAGER + NON-RECOVERABLE: the result is ``localCheckpoint``-ed at call
+    time. The keyed shingle frame is ``persist()``-ed for the self-join and
+    unpersisted before returning, so no CacheManager entry outlives the
+    call (cache-hygiene contract — see ``lsh_candidate_pairs``); executor
+    loss invalidates the returned frame, and callers composing larger
+    pipelines should treat this call as a materialization barrier.
     """
     shingles = _keyed_capped_shingles(
         df, text_col, id_col, n, max_shingle_freq

@@ -47,22 +47,27 @@ def shortest_paths(
     """
     if on_nonconverged not in ("raise", "return"):
         raise ValueError(f"on_nonconverged must be raise|return, got {on_nonconverged!r}")
-    from .pagerank import _maybe_broadcast, _sized_keyed_persist
+    from .pagerank import _iteration_edges, _maybe_broadcast
 
-    # Materialize + key-persist the symmetrized edges once: every BFS round
-    # joins against them, and without the persist each round re-executes the
-    # upstream edge lineage (often an expensive co-occurrence self-join) —
-    # measured 7.5 s → ~3 s at sf0.1. Keying on src co-locates the
-    # frontier-join build side across rounds.
-    sym = _sized_keyed_persist(symmetrize(edges).select("src", "dst"), key="src")
-    # LAZY checkpoint (r14 job fusion — the components.py r13 pattern):
-    # the first round's fingerprint aggregate is the action that
-    # materializes it, so the init costs no job of its own.
+    # Materialize the symmetrized edges once: every BFS round joins against
+    # them, and without it each round re-executes the upstream edge lineage
+    # (often an expensive co-occurrence self-join) — measured 7.5 s → ~3 s
+    # at sf0.1. With the distance table broadcast a round never moves the
+    # edges; they are keyed on src (the frontier-join key) only when one
+    # |E| shuffle is cheaper over the round budget (_iteration_edges).
+    sym = _iteration_edges(
+        symmetrize(edges).select("src", "dst"), key="src", rounds=max_iterations
+    )
+    # Lazy checkpoint + count() as its materializing action: the init table
+    # is saved before the loop (round 1 consumes it twice — union and join
+    # — and, left to round 1's job, it would be a marked ancestor of that
+    # round's checkpoint and never saved), and round 1 gets a measured row
+    # count for its broadcast hint.
     dist = landmarks.select(
         F.col("id"), F.col("id").alias("landmark"), F.lit(0).alias("distance")
     ).localCheckpoint(eager=False)
+    n_rows = dist.count()  # distance-table row count, re-measured each round
     prev_fp = None
-    n_rows = 0  # distance-table row count, known after each round's agg
     converged = False
     # ``max_iterations`` budgets EFFECTIVE rounds (rounds that change the
     # table — the hop diameter); the final no-change round that CONFIRMS
@@ -71,10 +76,10 @@ def shortest_paths(
     changes = 0
     while True:
         # Broadcast the (checkpoint-hidden — AQE sees no statistics) distance
-        # table into the keyed-persisted edge list while it is measurably
+        # table into the materialized edge list while it is measurably
         # small: the |E|-side never re-shuffles per round (the q23
-        # _maybe_broadcast discipline). Round 1 has no measured count yet
-        # and stays unhinted; every later round knows n from the fingerprint.
+        # _maybe_broadcast discipline). Every round knows n: round 1 from
+        # the init count, later rounds from the fingerprint.
         db = _maybe_broadcast(dist, n_rows, 2_000_000)
         cand = db.join(sym, db.id == sym.src).select(
             F.col("dst").alias("id"),

@@ -11,8 +11,9 @@ lets a fixed-round run be certified against an unrolled SQL oracle
 drives GraphX's lib algorithms; LPA is the community-detection member of
 that library).
 
-Scale shape per round: one join of the label table against the keyed-
-persisted symmetrized edges (shuffle on the frontier key), one map-side
+Scale shape per round: one join of the label table against the
+symmetrized edges (materialized once; keyed on src only when the round
+budget makes that cheaper — ``pagerank._iteration_edges``), one map-side
 combined count aggregate, one per-vertex window over that vertex's
 candidate labels only (bounded by its degree), then ``localCheckpoint``
 every 5th round and at the end to truncate lineage. Fixed rounds = fixed cost; LPA famously oscillates
@@ -31,9 +32,11 @@ from .builders import symmetrize
 def label_propagation(edges: DataFrame, num_iterations: int = 3) -> DataFrame:
     """Synchronous min-tie LPA over the undirected graph of ``edges``
     (src, dst) → ``(id, label)`` after ``num_iterations`` rounds."""
-    from .pagerank import _sized_keyed_persist
+    from .pagerank import _iteration_edges
 
-    sym = _sized_keyed_persist(symmetrize(edges).select("src", "dst"), key="src")
+    sym = _iteration_edges(
+        symmetrize(edges).select("src", "dst"), key="src", rounds=num_iterations
+    )
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()

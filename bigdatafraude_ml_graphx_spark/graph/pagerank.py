@@ -45,23 +45,39 @@ _ACC = "decimal(38,18)"  # used only for weight normalization totals
 _SCALE = 1e14
 
 
-def _sized_keyed_persist(df: DataFrame, key: str, target_rows: int = 250_000) -> DataFrame:
-    """Materialize ``df`` once, then hash-partition it on ``key`` with a
-    partition count derived from its measured size (~``target_rows`` rows per
-    partition) and persist.
+def _iteration_edges(
+    df: DataFrame, key: str, rounds: int, target_rows: int = 250_000
+) -> DataFrame:
+    """Materialize the edge lineage of an iterative operator ONCE (one eager
+    localCheckpoint) and lay it out for ``rounds`` rounds that each join the
+    edges against broadcast vertex state and reduce on ``key``.
 
-    Iterated frames need BOTH properties: persist() preserving the hash
-    partitioning on the aggregation key (so per-iteration groupBys fuse
-    partial+final with no Exchange) AND a partition count matched to the data
-    (32 near-empty partitions make a 10k-edge iteration pure task overhead;
-    at 100 TB the same formula yields thousands of partitions and full
-    parallelism). The count is read off an eager localCheckpoint, so it costs
-    one materialization the loop needs anyway — not an extra pass over the
-    upstream lineage (e.g. a co-occurrence self-join).
+    Such a round never moves the edge list: partial aggregation combines
+    each edge partition's rows before the exchange, so it shuffles at most
+    P × |V| rows (P edge partitions, |V| distinct keys) — the combine
+    GraphX's ``aggregateMessages`` relies on. Re-keying (hash-repartition on
+    ``key`` + persist, which keeps the partitioning so every round's
+    aggregate fuses with no exchange) instead pays one |E| shuffle and a
+    second cached copy up front, so it is taken only while it is cheaper
+    than what the rounds would move:
+
+        |E| < rounds × P × |V|
+
+    Otherwise the checkpoint itself is returned: no Exchange, no cached
+    copy. |E| and |V| come from one aggregate job over the checkpoint (|V|
+    by ``approx_count_distinct`` — the rule needs no exact count); the keyed
+    side takes ~``target_rows`` rows per partition, never more partitions
+    than the checkpoint has. Callers ``unpersist()`` the result after the
+    loop (a no-op on the checkpoint side).
     """
     ck = df.localCheckpoint(eager=True)
-    n = ck.count()
-    parts = max(1, min(ck.rdd.getNumPartitions(), -(-n // target_rows)))
+    n_edges, n_keys = ck.agg(
+        F.count("*"), F.approx_count_distinct(key)
+    ).collect()[0]
+    p = ck.rdd.getNumPartitions()
+    if n_edges >= rounds * p * n_keys:
+        return ck
+    parts = max(1, min(p, -(-n_edges // target_rows)))
     return ck.repartition(parts, F.col(key)).persist()
 
 
@@ -100,11 +116,16 @@ def normalize_weights(
 
     A window sum over ``src``, not agg + self-join: one pass over the edge
     lineage and one shuffle. The decimal accumulator keeps the total exact
-    (order-independent), so the result is deterministic either way."""
+    (order-independent), so the result is deterministic either way. The
+    share itself is a double division, as q23 and q162 build it: a decimal
+    division would round every share to Spark's 6-digit result scale (three
+    unit edges → 0.333333 each, summing to 0.999999)."""
     from pyspark.sql import Window
 
     total = F.sum(F.col(weight).cast(_ACC)).over(Window.partitionBy(src))
-    return edges.withColumn(weight, (F.col(weight) / total).cast("double"))
+    return edges.withColumn(
+        weight, F.col(weight).cast("double") / total.cast("double")
+    )
 
 
 def personalized_pagerank(
@@ -129,18 +150,19 @@ def personalized_pagerank(
         pr₀ = t;   prᵢ(v) = (1-α)·Σ_{u→v} prᵢ₋₁(u)·w(u,v) + α·t(v)
 
     Same execution shape and determinism contract as :func:`pagerank`
-    (keyed persist of the edge list, per-iteration broadcast of the rank
-    state, quantized int64 contribution sums, per-iteration
-    localCheckpoint); the teleport column rides the vertex frame so each
-    iteration is still one join + one aggregate. Scores sum to ≤ 1
-    (dangling mass decays — the walk-probability reading)."""
-    e = _sized_keyed_persist(
+    (edge list laid out once by ``_iteration_edges``, per-iteration
+    broadcast of the rank state, quantized int64 contribution sums,
+    per-iteration localCheckpoint); the teleport column rides the vertex
+    frame so each iteration is still one join + one aggregate. Scores sum
+    to ≤ 1 (dangling mass decays — the walk-probability reading)."""
+    e = _iteration_edges(
         edges.select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
             (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("w"),
         ),
         key="dst",
+        rounds=max_iter,
     )
     ids = e.select(F.col("src").alias("id")).unionByName(
         e.select(F.col("dst").alias("id"))
@@ -153,16 +175,18 @@ def personalized_pagerank(
     # Lazy checkpoints with the counts/first-consumer as materializing
     # actions (r14 job fusion, the components.py r13 pattern): the seed
     # set, vertex union, and teleport frame each cost one job, not two.
+    # |S| is counted FIRST: that job saves the seed blocks, so the vertex
+    # job below reads them instead of replaying the source lineage again.
     s = (
         sources.select(F.col(sources.columns[0]).alias("id"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    verts = ids.unionByName(s).distinct().localCheckpoint(eager=False)
-    n = verts.count()
     ns = s.count()
     if ns == 0:
         raise ValueError("personalized_pagerank: empty source set")
+    verts = ids.unionByName(s).distinct().localCheckpoint(eager=False)
+    n = verts.count()
     tele = (
         verts.join(s.withColumn("_tele", F.lit(1.0 / ns)), "id", "left_outer")
         .select("id", F.coalesce("_tele", F.lit(0.0)).alias("tele"))
@@ -221,20 +245,19 @@ def pagerank(
 ) -> DataFrame:
     """Run ``max_iter`` iterations of weighted PageRank. Returns
     ``(id, pagerank)`` over all vertices (edge endpoints ∪ ``vertices``)."""
-    # Materialize the edge lineage once — it is joined in EVERY iteration —
-    # then hash-partition it on ``dst``, the contribution-aggregation key,
-    # with a count-derived partition number, and persist. persist() (unlike
-    # localCheckpoint) PRESERVES output partitioning, so every iteration's
-    # groupBy(dst) fuses partial+final aggregation in one stage: in the
-    # broadcast-rank regime an iteration shuffles NOTHING — the |E|
-    # re-shuffle per iteration (5x at max_iter=5) becomes one setup shuffle.
-    e = _sized_keyed_persist(
+    # Materialize the edge lineage once — it is joined in EVERY iteration.
+    # With the rank state broadcast, an iteration's groupBy(dst) combines
+    # map-side and shuffles at most P × |V| rows, never the edge list;
+    # ``_iteration_edges`` re-keys the edges on ``dst`` only when one |E|
+    # shuffle is cheaper than max_iter such rounds.
+    e = _iteration_edges(
         edges.select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
             (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("w"),
         ),
         key="dst",
+        rounds=max_iter,
     )
 
     ids = e.select(F.col("src").alias("id")).unionByName(

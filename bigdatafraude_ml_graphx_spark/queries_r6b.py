@@ -349,12 +349,13 @@ def q168_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    from .graph.pagerank import _sized_keyed_persist
+    from .graph.pagerank import _iteration_edges
 
-    # Keyed persist on the per-step join key: the adjacency is joined at
-    # EVERY walk step — one setup shuffle; the tiny frontier broadcasts
-    # into it (AQE) so steps move no edge data.
-    adj = _sized_keyed_persist(
+    # The adjacency is joined at EVERY walk step, so it is materialized
+    # once; the tiny frontier broadcasts into it (AQE) so steps move no edge
+    # data. It is keyed on the per-step join key only when one |E| shuffle
+    # is cheaper over _WALK_LEN steps (the _iteration_edges rule).
+    adj = _iteration_edges(
         sym.select(
             "src",
             "dst",
@@ -365,6 +366,7 @@ def q168_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(Window.partitionBy("src")).alias("deg"),
         ),
         key="src",
+        rounds=_WALK_LEN,
     )
     starts = (
         ev.filter(F.col("user_id") % 50 == 0)

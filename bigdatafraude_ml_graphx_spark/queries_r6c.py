@@ -56,18 +56,20 @@ def q175_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     and takes MAX(d) — exponential as a plan, exact as a spec; the
     engine's relaxation is the plan that survives 100×."""
     from .graph import cooccurrence_edges
-    from .graph.pagerank import _maybe_broadcast, _sized_keyed_persist
+    from .graph.pagerank import _iteration_edges, _maybe_broadcast
 
     ev = load_table(spark, sf_dir, "events")
-    # Keyed persist on the relaxation join key (the q23 discipline): the
-    # edge list is joined every round — one setup shuffle, zero per-round
-    # edge exchanges in the broadcast-frontier regime.
-    e = _sized_keyed_persist(
+    # The edge list is joined every round, so it is materialized once; in
+    # the broadcast-frontier regime a round's max-combine moves at most
+    # P × |V| rows, and the edges are keyed on the relaxation join key only
+    # when one |E| shuffle is cheaper over the round budget.
+    e = _iteration_edges(
         cooccurrence_edges(ev, "user_id", "ts", "hour", ("event_type",))
         .filter(F.col("weight") >= 6)
         .select("src", "dst")
         .distinct(),
         key="src",
+        rounds=_LEVEL_MAX_ROUNDS,
     )
     # Lazy + count() as the materializer (r14 job fusion): one init job.
     nodes = (

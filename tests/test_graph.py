@@ -103,27 +103,16 @@ def test_property_graph_facade(spark, crafted):
     assert pr_u[30] == max(pr_u.values())
 
 
-def test_shortest_paths_matches_python_bfs(spark):
-    """Hop distances equal a pure-Python BFS on a hand-checkable graph with
-    a cycle, a chain, and an unreachable island."""
+def _bfs_reference(edge_list, landmarks):
+    """Undirected hop distances {(vertex, landmark): d} by plain BFS."""
     from collections import deque
-
-    from bigdatafraude_ml_graphx_spark.graph.bfs import shortest_paths
-
-    edge_list = [(1, 2), (2, 3), (3, 4), (4, 1), (4, 5), (5, 6), (7, 8)]
-    edges = spark.createDataFrame(edge_list, "src long, dst long")
-    landmarks = spark.createDataFrame([(1,), (7,)], "id long")
-    got = {
-        (r.id, r.landmark): r.distance
-        for r in shortest_paths(edges, landmarks).collect()
-    }
 
     adj = {}
     for a, b in edge_list:
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
     expect = {}
-    for lm in (1, 7):
+    for lm in landmarks:
         seen = {lm: 0}
         dq = deque([lm])
         while dq:
@@ -134,7 +123,22 @@ def test_shortest_paths_matches_python_bfs(spark):
                     dq.append(v)
         for v, d in seen.items():
             expect[(v, lm)] = d
-    assert got == expect
+    return expect
+
+
+def test_shortest_paths_matches_python_bfs(spark):
+    """Hop distances equal a pure-Python BFS on a hand-checkable graph with
+    a cycle, a chain, and an unreachable island."""
+    from bigdatafraude_ml_graphx_spark.graph.bfs import shortest_paths
+
+    edge_list = [(1, 2), (2, 3), (3, 4), (4, 1), (4, 5), (5, 6), (7, 8)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    landmarks = spark.createDataFrame([(1,), (7,)], "id long")
+    got = {
+        (r.id, r.landmark): r.distance
+        for r in shortest_paths(edges, landmarks).collect()
+    }
+    assert got == _bfs_reference(edge_list, (1, 7))
     assert (6, 1) in got and got[(6, 1)] == 3  # 1→4 (cycle edge) →5→6
     assert (6, 7) not in got  # island stays unreachable
 
@@ -401,3 +405,190 @@ def test_k_truss_cascading_peel(spark):
     )
     t3 = {(r.src, r.dst) for r in k_truss(edges, 3).collect()}
     assert t3 == {(1, 2), (1, 3), (2, 3), (1, 4), (2, 4)}
+
+
+def test_normalize_weights_shares_sum_to_one(spark):
+    """Each source's shares sum to 1: the share is a double division over
+    the exact decimal total, not a decimal division rounded to 6 digits
+    (three unit edges would get 0.333333 each and sum to 0.999999)."""
+    from bigdatafraude_ml_graphx_spark.graph import normalize_weights
+
+    e = spark.createDataFrame(
+        [(1, 2, 1), (1, 3, 1), (1, 4, 1), (2, 1, 3), (2, 3, 4), (5, 1, 7)],
+        "src long, dst long, weight long",
+    )
+    totals = {}
+    for r in normalize_weights(e).collect():
+        totals[r["src"]] = totals.get(r["src"], 0.0) + r["weight"]
+    assert set(totals) == {1, 2, 5}
+    assert all(abs(t - 1.0) <= 1e-15 for t in totals.values()), totals
+
+
+# ---------------------------------------------------------------------------
+# Edge layout: both sides of the _iteration_edges rule
+# (re-key only when |E| < rounds × P × |V|)
+# ---------------------------------------------------------------------------
+
+# A 200-vertex clique with a 10-edge pendant chain off vertex 199, in ONE
+# partition: |E| = 39,820 symmetrized edges, |V| = 210, P = 1, so every
+# operator's default round budget (≤ 30) leaves it on the checkpoint side.
+_CLIQUE = 200
+_DENSE_EDGES = [
+    (i, j) for i in range(_CLIQUE) for j in range(i + 1, _CLIQUE)
+] + [(v, v + 1) for v in range(_CLIQUE - 1, _CLIQUE + 9)]
+
+
+@pytest.fixture(scope="module")
+def dense(spark):
+    return spark.createDataFrame(_DENSE_EDGES, "src long, dst long").coalesce(1)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().toString()
+
+
+def _is_keyed(df) -> bool:
+    return "InMemoryRelation" in _plan(df)
+
+
+@pytest.fixture
+def edge_layouts(monkeypatch):
+    """Records, per ``_iteration_edges`` call, whether the edges were
+    re-keyed (callers look the helper up at call time)."""
+    import importlib
+
+    # (``graph.pagerank`` the attribute is the function, not the module)
+    pr_mod = importlib.import_module("bigdatafraude_ml_graphx_spark.graph.pagerank")
+    real = pr_mod._iteration_edges
+    keyed: list[bool] = []
+
+    def spy(df, key, rounds, **kwargs):
+        out = real(df, key, rounds, **kwargs)
+        keyed.append(_is_keyed(out))
+        return out
+
+    monkeypatch.setattr(pr_mod, "_iteration_edges", spy)
+    return keyed
+
+
+def _sym_weighted(edge_list):
+    """Symmetrized edges with per-source shares 1/out-degree, as doubles."""
+    sym = [(a, b) for a, b in edge_list] + [(b, a) for a, b in edge_list]
+    deg = {}
+    for a, _ in sym:
+        deg[a] = deg.get(a, 0) + 1
+    return [(a, b, 1.0 / deg[a]) for a, b in sym]
+
+
+def _pagerank_reference(weighted, teleport=None, alpha=0.15, max_iter=5,
+                        scale=1e14):
+    """Power iteration with the engine's arithmetic: each product quantized
+    to an int64 at ``scale``, exact integer sums, restart mass α/n (or α·t
+    for a teleport set)."""
+    import math
+
+    verts = {v for a, b, _ in weighted for v in (a, b)}
+    n = len(verts)
+    if teleport is None:
+        pr = {v: 1.0 / n for v in verts}
+        restart = {v: alpha / n for v in verts}
+    else:
+        tele = {v: (1.0 / len(teleport) if v in teleport else 0.0) for v in verts}
+        pr = dict(tele)
+        restart = {v: alpha * tele[v] for v in verts}
+    for _ in range(max_iter):
+        q = {}
+        for a, b, w in weighted:
+            q[b] = q.get(b, 0) + math.floor(pr[a] * w * scale + 0.5)
+        pr = {
+            v: (1.0 - alpha) * (float(q[v]) / scale if v in q else 0.0) + restart[v]
+            for v in verts
+        }
+    return pr
+
+
+def _lpa_reference(edge_list, rounds):
+    """Synchronous LPA, ties to the smallest label."""
+    from collections import Counter
+
+    nbrs = {}
+    for a, b in edge_list:
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+    labels = {v: v for v in nbrs}
+    for _ in range(rounds):
+        counts = {v: Counter(labels[u] for u in ns) for v, ns in nbrs.items()}
+        labels = {v: min(c, key=lambda lb: (-c[lb], lb)) for v, c in counts.items()}
+    return labels
+
+
+def _run_all_operators(spark, edges, edge_list):
+    """PageRank, PPR, CC, BFS and LPA on ``edges`` against the pure-Python
+    references."""
+    from tests.test_graph_property import _union_find
+
+    from bigdatafraude_ml_graphx_spark.graph.bfs import shortest_paths
+    from bigdatafraude_ml_graphx_spark.graph.lpa import label_propagation
+    from bigdatafraude_ml_graphx_spark.graph.pagerank import (
+        personalized_pagerank,
+    )
+
+    verts = sorted({v for e in edge_list for v in e})
+    weighted = _sym_weighted(edge_list)
+    w_df = spark.createDataFrame(weighted, "src long, dst long, weight double")
+    # Same partition count as ``edges``, so PageRank/PPR land on the same
+    # side of the layout rule as the other operators.
+    w_df = w_df.coalesce(edges.rdd.getNumPartitions())
+    seeds = verts[:2]
+    seed_df = spark.createDataFrame([(v,) for v in seeds], "id long")
+
+    pr = {r["id"]: r["pagerank"] for r in pagerank(w_df).collect()}
+    assert pr == _pagerank_reference(weighted)
+    ppr = {r["id"]: r["pagerank"]
+           for r in personalized_pagerank(w_df, seed_df).collect()}
+    assert ppr == _pagerank_reference(weighted, teleport=set(seeds))
+    cc = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+    assert cc == _union_find(edge_list, verts)
+    sp = {(r.id, r.landmark): r.distance
+          for r in shortest_paths(edges, seed_df).collect()}
+    assert sp == _bfs_reference(edge_list, seeds)
+    lpa = {r.id: r.label for r in label_propagation(edges, 3).collect()}
+    assert lpa == _lpa_reference(edge_list, 3)
+
+
+def test_dense_graph_skips_rekey_and_matches_references(spark, dense, edge_layouts):
+    """|E| ≥ rounds × P × |V|: every operator iterates over the checkpoint
+    itself (map-side-combined rounds) and still equals its reference."""
+    _run_all_operators(spark, dense, _DENSE_EDGES)
+    assert edge_layouts == [False] * 5
+
+
+def test_sparse_graph_stays_keyed_and_matches_references(
+    spark, crafted, edge_layouts
+):
+    """|E| < rounds × P × |V|: the small sparse graph keeps the keyed
+    persist, and the same references hold."""
+    edge_list = [(r.src, r.dst) for r in crafted.collect()]
+    _run_all_operators(spark, crafted, edge_list)
+    assert edge_layouts == [True] * 5
+
+
+def test_iteration_edges_layout_plans(spark, dense, crafted):
+    """The checkpoint side holds no Exchange and no cached copy over the
+    edges; the keyed side is a repartition on the key, persisted."""
+    from bigdatafraude_ml_graphx_spark.graph.pagerank import _iteration_edges
+
+    flat = _iteration_edges(symmetrize(dense), key="dst", rounds=30)
+    plan = _plan(flat)
+    assert "Exchange" not in plan and "InMemoryRelation" not in plan
+    assert flat.count() == 2 * len(_DENSE_EDGES)
+
+    # The same edges over a round budget past |E| / (P × |V|) re-key.
+    keyed = _iteration_edges(symmetrize(dense), key="dst", rounds=400)
+    plan = _plan(keyed)
+    assert "InMemoryRelation" in plan and "Exchange" in plan
+    keyed.unpersist()
+
+    small = _iteration_edges(symmetrize(crafted), key="dst", rounds=5)
+    assert _is_keyed(small)
+    small.unpersist()

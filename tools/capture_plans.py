@@ -57,12 +57,13 @@ def main() -> None:
     interior: list[tuple[str, str]] = []
     orig_ckpt = DataFrame.localCheckpoint
 
-    def recording_ckpt(self, eager=True):
+    def recording_ckpt(self, *args, **kwargs):
+        eager = kwargs.get("eager", args[0] if args else True)
         try:
             interior.append((f"localCheckpoint(eager={eager})", _formatted(self)))
         except Exception as exc:  # capture must never change behavior
             interior.append(("localCheckpoint(<plan capture failed>)", str(exc)))
-        return orig_ckpt(self, eager=eager)
+        return orig_ckpt(self, *args, **kwargs)
 
     for name in names:
         interior.clear()
