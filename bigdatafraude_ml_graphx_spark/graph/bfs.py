@@ -53,11 +53,9 @@ def shortest_paths(
     # them, and without it each round re-executes the upstream edge lineage
     # (often an expensive co-occurrence self-join) — measured 7.5 s → ~3 s
     # at sf0.1. With the distance table broadcast a round never moves the
-    # edges; they are keyed on src (the frontier-join key) only when one
-    # |E| shuffle is cheaper over the round budget (_iteration_edges).
-    sym = _iteration_edges(
-        symmetrize(edges).select("src", "dst"), key="src", rounds=max_iterations
-    )
+    # edges, and its min-reduce groups by (dst, landmark), which no edge
+    # layout pre-partitions, so the edges are not re-keyed (_iteration_edges).
+    sym = _iteration_edges(symmetrize(edges).select("src", "dst"))
     # Lazy checkpoint + count() as its materializing action: the init table
     # is saved before the loop (round 1 consumes it twice — union and join
     # — and, left to round 1's job, it would be a marked ancestor of that

@@ -14,13 +14,11 @@ grows 0.27 s → 1.10 s without checkpointing,
 ``notebooks/4_graphx.ipynb:753-757``).
 
 Scale: O(graph diameter) rounds. Social/fraud graphs have tiny diameters
-(≤ ~20). The edge list is materialized ONCE. While the label frame fits a
-broadcast, a round never moves it: the neighbor-min combines map-side, so a
-round shuffles at most P × |V| rows (P edge partitions) — and the edges are
-re-keyed on the propagation key (one |E| shuffle, after which a round
-shuffles nothing) only when that is cheaper over the round budget
-(``pagerank._iteration_edges``). Past the broadcast threshold each round
-degrades to one |E|+|V| shuffle on the id key.
+(≤ ~20). The edge list is materialized ONCE and not re-keyed. While the
+label frame fits a broadcast, a round never moves it: the neighbor-min
+combines map-side, so a round shuffles at most P × |V| rows (P edge
+partitions; ``pagerank._iteration_edges``). Past the broadcast threshold
+each round degrades to one |E|+|V| shuffle on the id key.
 (GraphFrames' large-star/small-star does O(log d) rounds — worth adopting
 only if diameters are large.)
 """
@@ -52,9 +50,9 @@ def connected_components(
     cell 44735382 output).
     """
     # Materialize the (possibly expensive) edge lineage ONCE — every
-    # iteration joins against `sym`. Its layout follows the round budget:
-    # keyed on ``v`` (the neighbor-min key) only when one |E| shuffle is
-    # cheaper than max_iter map-side-combined rounds (_iteration_edges).
+    # iteration joins against `sym`. It is not re-keyed on ``v``: the
+    # neighbor-min combines map-side, so a round moves at most P × |V| rows
+    # (_iteration_edges).
     from .pagerank import _coalesced, _iteration_edges, _maybe_broadcast
 
     sym = symmetrize(edges.select(src, dst), src, dst).select(
@@ -66,7 +64,7 @@ def connected_components(
     # saves a full |E| shuffle here.
     if dedup_edges:
         sym = sym.distinct()
-    sym = _iteration_edges(sym, key="v", rounds=max_iter)
+    sym = _iteration_edges(sym)
 
     ids = sym.select(F.col("u").alias("id"))
     if vertices is not None:

@@ -12,10 +12,11 @@ drives GraphX's lib algorithms; LPA is the community-detection member of
 that library).
 
 Scale shape per round: one join of the label table against the
-symmetrized edges (materialized once; keyed on src only when the round
-budget makes that cheaper — ``pagerank._iteration_edges``), one map-side
-combined count aggregate, one per-vertex window over that vertex's
-candidate labels only (bounded by its degree), then ``localCheckpoint``
+symmetrized edges, materialized once and keyed on src
+(``pagerank._iteration_edges``) — the count per (vertex, label) combines
+little map-side, and keyed edges let it and the window below run with no
+edge-sized exchange; one count aggregate; one per-vertex window over
+that vertex's candidate labels only (bounded by its degree), then ``localCheckpoint``
 every 5th round and at the end to truncate lineage. Fixed rounds = fixed cost; LPA famously oscillates
 rather than converges, which is why the GraphX API itself takes
 ``maxSteps`` instead of a convergence test.
@@ -34,9 +35,7 @@ def label_propagation(edges: DataFrame, num_iterations: int = 3) -> DataFrame:
     (src, dst) → ``(id, label)`` after ``num_iterations`` rounds."""
     from .pagerank import _iteration_edges
 
-    sym = _iteration_edges(
-        symmetrize(edges).select("src", "dst"), key="src", rounds=num_iterations
-    )
+    sym = _iteration_edges(symmetrize(edges).select("src", "dst"), key="src")
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()

@@ -351,10 +351,9 @@ def q168_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .graph.pagerank import _iteration_edges
 
-    # The adjacency is joined at EVERY walk step, so it is materialized
-    # once; the tiny frontier broadcasts into it (AQE) so steps move no edge
-    # data. It is keyed on the per-step join key only when one |E| shuffle
-    # is cheaper over _WALK_LEN steps (the _iteration_edges rule).
+    # The adjacency is joined at EVERY walk step: materialize it once, keyed
+    # on the per-step join key (_iteration_edges) — one setup shuffle; the
+    # tiny frontier broadcasts into it (AQE) so steps move no edge data.
     adj = _iteration_edges(
         sym.select(
             "src",
@@ -366,7 +365,6 @@ def q168_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(Window.partitionBy("src")).alias("deg"),
         ),
         key="src",
-        rounds=_WALK_LEN,
     )
     starts = (
         ev.filter(F.col("user_id") % 50 == 0)

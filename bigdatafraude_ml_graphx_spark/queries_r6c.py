@@ -59,17 +59,15 @@ def q175_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph.pagerank import _iteration_edges, _maybe_broadcast
 
     ev = load_table(spark, sf_dir, "events")
-    # The edge list is joined every round, so it is materialized once; in
-    # the broadcast-frontier regime a round's max-combine moves at most
-    # P × |V| rows, and the edges are keyed on the relaxation join key only
-    # when one |E| shuffle is cheaper over the round budget.
+    # The edge list is joined every round: materialize it once, keyed on
+    # the relaxation join key (_iteration_edges) — one setup shuffle, and a
+    # frontier too large to broadcast joins it with no edge exchange.
     e = _iteration_edges(
         cooccurrence_edges(ev, "user_id", "ts", "hour", ("event_type",))
         .filter(F.col("weight") >= 6)
         .select("src", "dst")
         .distinct(),
         key="src",
-        rounds=_LEVEL_MAX_ROUNDS,
     )
     # Lazy + count() as the materializer (r14 job fusion): one init job.
     nodes = (

@@ -425,13 +425,13 @@ def test_normalize_weights_shares_sum_to_one(spark):
 
 
 # ---------------------------------------------------------------------------
-# Edge layout: both sides of the _iteration_edges rule
-# (re-key only when |E| < rounds × P × |V|)
+# Edge layout (_iteration_edges): PageRank, PPR, CC and BFS iterate over the
+# checkpointed edges as they are; LPA keys them on src
 # ---------------------------------------------------------------------------
 
 # A 200-vertex clique with a 10-edge pendant chain off vertex 199, in ONE
-# partition: |E| = 39,820 symmetrized edges, |V| = 210, P = 1, so every
-# operator's default round budget (≤ 30) leaves it on the checkpoint side.
+# partition: |E| = 39,820 symmetrized edges over |V| = 210 — dense enough
+# that a round's map-side combine shrinks the edges ~190-fold.
 _CLIQUE = 200
 _DENSE_EDGES = [
     (i, j) for i in range(_CLIQUE) for j in range(i + 1, _CLIQUE)
@@ -462,8 +462,8 @@ def edge_layouts(monkeypatch):
     real = pr_mod._iteration_edges
     keyed: list[bool] = []
 
-    def spy(df, key, rounds, **kwargs):
-        out = real(df, key, rounds, **kwargs)
+    def spy(df, *args, **kwargs):
+        out = real(df, *args, **kwargs)
         keyed.append(_is_keyed(out))
         return out
 
@@ -536,8 +536,7 @@ def _run_all_operators(spark, edges, edge_list):
     verts = sorted({v for e in edge_list for v in e})
     weighted = _sym_weighted(edge_list)
     w_df = spark.createDataFrame(weighted, "src long, dst long, weight double")
-    # Same partition count as ``edges``, so PageRank/PPR land on the same
-    # side of the layout rule as the other operators.
+    # Same partition count as ``edges``: every operator iterates the same P.
     w_df = w_df.coalesce(edges.rdd.getNumPartitions())
     seeds = verts[:2]
     seed_df = spark.createDataFrame([(v,) for v in seeds], "id long")
@@ -556,39 +555,34 @@ def _run_all_operators(spark, edges, edge_list):
     assert lpa == _lpa_reference(edge_list, 3)
 
 
-def test_dense_graph_skips_rekey_and_matches_references(spark, dense, edge_layouts):
-    """|E| ≥ rounds × P × |V|: every operator iterates over the checkpoint
-    itself (map-side-combined rounds) and still equals its reference."""
-    _run_all_operators(spark, dense, _DENSE_EDGES)
-    assert edge_layouts == [False] * 5
-
-
-def test_sparse_graph_stays_keyed_and_matches_references(
-    spark, crafted, edge_layouts
+@pytest.mark.parametrize("graph", ["dense", "crafted"])
+def test_operators_edge_layout_matches_references(
+    spark, graph, request, edge_layouts
 ):
-    """|E| < rounds × P × |V|: the small sparse graph keeps the keyed
-    persist, and the same references hold."""
-    edge_list = [(r.src, r.dst) for r in crafted.collect()]
-    _run_all_operators(spark, crafted, edge_list)
-    assert edge_layouts == [True] * 5
+    """On a dense graph and on the small sparse one, PageRank, PPR, CC and
+    BFS iterate over the unkeyed checkpoint, LPA over src-keyed edges, and
+    every operator equals its pure-Python reference."""
+    edges = request.getfixturevalue(graph)
+    edge_list = (
+        _DENSE_EDGES if graph == "dense"
+        else [(r.src, r.dst) for r in edges.collect()]
+    )
+    _run_all_operators(spark, edges, edge_list)
+    assert edge_layouts == [False, False, False, False, True]
 
 
-def test_iteration_edges_layout_plans(spark, dense, crafted):
-    """The checkpoint side holds no Exchange and no cached copy over the
-    edges; the keyed side is a repartition on the key, persisted."""
+def test_iteration_edges_layout_plans(spark, dense):
+    """The unkeyed layout holds no Exchange and no cached copy over the
+    edges; the keyed one is a repartition on the key, persisted."""
     from bigdatafraude_ml_graphx_spark.graph.pagerank import _iteration_edges
 
-    flat = _iteration_edges(symmetrize(dense), key="dst", rounds=30)
+    flat = _iteration_edges(symmetrize(dense))
     plan = _plan(flat)
     assert "Exchange" not in plan and "InMemoryRelation" not in plan
     assert flat.count() == 2 * len(_DENSE_EDGES)
 
-    # The same edges over a round budget past |E| / (P × |V|) re-key.
-    keyed = _iteration_edges(symmetrize(dense), key="dst", rounds=400)
+    keyed = _iteration_edges(symmetrize(dense), key="src")
     plan = _plan(keyed)
     assert "InMemoryRelation" in plan and "Exchange" in plan
+    assert keyed.count() == 2 * len(_DENSE_EDGES)
     keyed.unpersist()
-
-    small = _iteration_edges(symmetrize(crafted), key="dst", rounds=5)
-    assert _is_keyed(small)
-    small.unpersist()
