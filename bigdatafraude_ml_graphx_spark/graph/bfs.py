@@ -10,10 +10,8 @@ fraud-relevant "how far is this account from a known-bad account" measure.
 Algorithm: Bellman-Ford-style rounds on hop distance. Per round, the
 current distance table joins the symmetrized edge list (one shuffle on the
 frontier key), candidate distances union in, and ``min`` per (vertex,
-landmark) re-aggregates. Convergence is detected by a (row-count,
-total-distance) fingerprint — two scalars per round, the same discipline as
-``components.py`` — and every round ``localCheckpoint``s to truncate
-lineage. Rounds = graph diameter (hop metric), the number no BSP system can
+landmark) re-aggregates, to fixpoint (``fixpoint.fixpoint``). Rounds =
+graph diameter (hop metric), the number no BSP system can
 beat; at 100 TB each round is one join + one aggregate, both
 AQE-planned.
 """
@@ -47,7 +45,7 @@ def shortest_paths(
     """
     if on_nonconverged not in ("raise", "return"):
         raise ValueError(f"on_nonconverged must be raise|return, got {on_nonconverged!r}")
-    from .pagerank import _iteration_edges, _maybe_broadcast
+    from .fixpoint import NoFixpoint, _iteration_edges, _maybe_broadcast, fixpoint
 
     # Materialize the symmetrized edges once: every BFS round joins against
     # them, and without it each round re-executes the upstream edge lineage
@@ -56,66 +54,27 @@ def shortest_paths(
     # edges, and its min-reduce groups by (dst, landmark), which no edge
     # layout pre-partitions, so the edges are not re-keyed (_iteration_edges).
     sym = _iteration_edges(symmetrize(edges).select("src", "dst"))
-    # Lazy checkpoint + count() as its materializing action: the init table
-    # is saved before the loop (round 1 consumes it twice — union and join
-    # — and, left to round 1's job, it would be a marked ancestor of that
-    # round's checkpoint and never saved), and round 1 gets a measured row
-    # count for its broadcast hint.
-    dist = landmarks.select(
-        F.col("id"), F.col("id").alias("landmark"), F.lit(0).alias("distance")
-    ).localCheckpoint(eager=False)
-    n_rows = dist.count()  # distance-table row count, re-measured each round
-    prev_fp = None
-    converged = False
-    # ``max_iterations`` budgets EFFECTIVE rounds (rounds that change the
-    # table — the hop diameter); the final no-change round that CONFIRMS
-    # convergence is free, so a budget equal to the exact diameter
-    # succeeds rather than spuriously raising.
-    changes = 0
-    while True:
-        # Broadcast the (checkpoint-hidden — AQE sees no statistics) distance
-        # table into the materialized edge list while it is measurably
-        # small: the |E|-side never re-shuffles per round (the q23
-        # _maybe_broadcast discipline). Every round knows n: round 1 from
-        # the init count, later rounds from the fingerprint.
-        db = _maybe_broadcast(dist, n_rows, 2_000_000)
+
+    def step(dist: DataFrame, n: int) -> DataFrame:
+        db = _maybe_broadcast(dist, n)
         cand = db.join(sym, db.id == sym.src).select(
             F.col("dst").alias("id"),
             "landmark",
             (F.col("distance") + 1).alias("distance"),
         )
-        new = (
+        return (
             dist.unionByName(cand)
             .groupBy("id", "landmark")
             .agg(F.min("distance").alias("distance"))
-            # LAZY: the fingerprint aggregate below materializes the
-            # checkpoint — one job per round instead of two (r14, the
-            # components.py r13 fusion; lineage truncation unchanged).
-            .localCheckpoint(eager=False)
         )
-        row = new.agg(
-            F.count("*").alias("n"), F.sum("distance").alias("s")
-        ).collect()[0]
-        fp = (row["n"], row["s"])
-        n_rows = row["n"]
-        if fp == prev_fp:
-            converged = True
-            dist = new
-            break
-        changes += 1
-        if changes > max_iterations:
-            # over budget: discard the extra round so 'return' callers get
-            # exactly max_iterations-hop distances
-            break
-        dist = new
-        prev_fp = fp
-    sym.unpersist()
-    if not converged and on_nonconverged == "raise":
-        raise RuntimeError(
-            f"shortest_paths: fingerprint did not stabilize within "
-            f"max_iterations={max_iterations} rounds — the graph's hop "
-            f"diameter exceeds the budget and distances are truncated. "
-            f"Raise max_iterations, or pass on_nonconverged='return' for "
-            f"bounded-hop semantics."
-        )
-    return dist
+
+    dist = landmarks.select(
+        F.col("id"), F.col("id").alias("landmark"), F.lit(0).alias("distance")
+    )
+    try:
+        return fixpoint("shortest_paths", dist, step, max_iterations)
+    except NoFixpoint as err:
+        if on_nonconverged == "raise":
+            raise
+        # exactly max_iterations-hop distances
+        return err.state

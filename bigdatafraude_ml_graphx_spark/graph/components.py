@@ -7,17 +7,14 @@ same semantics in pure DataFrames: iterative min-label propagation
 
     label(v) ← min(label(v), min over neighbors u of label(u))
 
-to fixpoint. Each iteration is one equi join + one aggregation (both
-AQE-planned); lineage is truncated with ``localCheckpoint`` every iteration —
-the lesson the reference's own PageRank loop teaches (its per-iteration time
-grows 0.27 s → 1.10 s without checkpointing,
-``notebooks/4_graphx.ipynb:753-757``).
+to fixpoint (``fixpoint.fixpoint``). Each iteration is one equi join + one
+aggregation (both AQE-planned).
 
 Scale: O(graph diameter) rounds. Social/fraud graphs have tiny diameters
 (≤ ~20). The edge list is materialized ONCE and not re-keyed. While the
 label frame fits a broadcast, a round never moves it: the neighbor-min
 combines map-side, so a round shuffles at most P × |V| rows (P edge
-partitions; ``pagerank._iteration_edges``). Past the broadcast threshold
+partitions; ``fixpoint._iteration_edges``). Past the broadcast threshold
 each round degrades to one |E|+|V| shuffle on the id key.
 (GraphFrames' large-star/small-star does O(log d) rounds — worth adopting
 only if diameters are large.)
@@ -37,23 +34,18 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    checkpoint_every: int = 1,
-    broadcast_rows: int = 2_000_000,
     dedup_edges: bool = True,
 ) -> DataFrame:
     """Label every vertex with its component id (the min vertex id in the
-    component). Returns ``(id, component)``.
+    component). Returns ``(id, component)``. Raises if the labels are still
+    changing after ``max_iter`` rounds.
 
     ``vertices`` (a DF with an ``id`` column) may add isolated vertices that
     appear in no edge; they become singleton components, matching GraphFrames
     (the reference graph is 99.8% singletons — 275,191 of 275,236 components,
     cell 44735382 output).
     """
-    # Materialize the (possibly expensive) edge lineage ONCE — every
-    # iteration joins against `sym`. It is not re-keyed on ``v``: the
-    # neighbor-min combines map-side, so a round moves at most P × |V| rows
-    # (_iteration_edges).
-    from .pagerank import _coalesced, _iteration_edges, _maybe_broadcast
+    from .fixpoint import _iteration_edges, _maybe_broadcast, fixpoint
 
     sym = symmetrize(edges.select(src, dst), src, dst).select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -69,20 +61,11 @@ def connected_components(
     ids = sym.select(F.col("u").alias("id"))
     if vertices is not None:
         ids = ids.unionByName(vertices.select("id"))
-    labels = ids.distinct().withColumn("component", F.col("id"))
-    # Lazy checkpoint: the count() is the materializing action (one job,
-    # not two — same fusion as the iteration body below).
-    labels = labels.localCheckpoint(eager=False)
-    n_verts = labels.count()
-    labels = _coalesced(labels, n_verts)
 
-    prev_fp: int | None = None
-    for i in range(max_iter):
+    def step(labels: DataFrame, n: int) -> DataFrame:
         # Candidate labels flowing across edges: min neighbor label per
-        # vertex. The label frame is one narrow row per vertex — broadcast
-        # it while it fits so the (much larger) edge list never re-shuffles
-        # (localCheckpoint hides its size from AQE; see _maybe_broadcast).
-        lb = _maybe_broadcast(labels, n_verts, broadcast_rows)
+        # vertex, with the label state broadcast into the edge list.
+        lb = _maybe_broadcast(labels, n)
         neighbor_min = (
             sym.join(lb, sym.u == lb.id)
             .select(F.col("v").alias("id"), F.col("component"))
@@ -92,48 +75,19 @@ def connected_components(
         # least() ignores NULLs, so isolated vertices (no neighbor row after
         # the left join) keep their own label. No broadcast hint on
         # neighbor_min: labels ⋈ neighbor_min is |V|-vs-|V| — a broadcast
-        # build job per iteration costs more than the equal-sized exchange
-        # it avoids, and at billion-vertex scale the shuffle join is the
-        # only correct plan. Only the label state joined against the
-        # |E|-scale edge list needs the hint.
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least("component", "nbr_component").alias("component"),
-            )
+        # build job per round costs more than the equal-sized exchange it
+        # avoids, and at billion-vertex scale the shuffle join is the only
+        # correct plan.
+        return labels.join(neighbor_min, "id", "left").select(
+            "id", F.least("component", "nbr_component").alias("component")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            # LAZY checkpoint (optimization r13): the fingerprint aggregate
-            # below is the job that materializes it — one job per iteration
-            # instead of two (the eager checkpoint job + the collect job),
-            # halving the per-iteration scheduling overhead that dominates
-            # small-diameter rounds. Lineage truncation is unchanged: the
-            # blocks are saved by that first action, and every later
-            # consumer (the next iteration, the caller) reads them.
-            new_labels = new_labels.localCheckpoint(eager=False)
-        # Convergence test without a join: labels only ever DECREASE
-        # (numerically for numeric ids, lexicographically for string ids), so
-        # the fixpoint is reached exactly when the label multiset stops
-        # changing. Detect change via a type-agnostic hash fingerprint — one
-        # cheap aggregate over the (checkpointed) labels. A plain
-        # F.sum("component") would be NULL for string ids (the reference's own
-        # graph casts ids to string,
-        # /root/reference/notebooks/4_graphx.ipynb:334-336) and NULL == NULL
-        # would end the loop after one round with wrong labels. bit_xor is
-        # order-insensitive and cannot overflow under ANSI mode (sum can).
-        # (An xor collision between consecutive DIFFERENT label sets would
-        # exit one round early — probability ~2^-64 per round, negligible.)
-        fingerprint = F.bit_xor(F.xxhash64("id", "component"))
-        new_fp = new_labels.agg(fingerprint).collect()[0][0]
-        if prev_fp is None:
-            prev_fp = labels.agg(fingerprint).collect()[0][0]
-        labels = new_labels
-        if new_fp == prev_fp:
-            break
-        prev_fp = new_fp
-    sym.unpersist()
-    return labels
+
+    return fixpoint(
+        "connected_components",
+        ids.distinct().withColumn("component", F.col("id")),
+        step,
+        max_iter,
+    )
 
 
 def connected_components_star(
@@ -162,25 +116,15 @@ def connected_components_star(
     neighbors (max-keyed representation) onto the same min. Both are window
     minimums over the edge key — per-round cost is |E| through two hash
     shuffles, monotonically shrinking as stars flatten. Convergence = edge
-    fingerprint unchanged (same bit_xor/xxhash64 aggregate as label
-    propagation); at the fixpoint every edge is (vertex, root).
+    set unchanged (``fixpoint``); at the fixpoint every edge is
+    (vertex, root). Raises if the edges still change after ``max_iter``
+    rounds.
     """
     from pyspark.sql import Window
 
-    # LAZY checkpoints (r14 job fusion, same pattern as
-    # connected_components above): the per-round fingerprint aggregate is
-    # the action that materializes each checkpoint — one job per round
-    # instead of two; truncation unchanged.
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    from .fixpoint import fixpoint
 
-    fingerprint = F.bit_xor(F.xxhash64("u", "v"))
-    prev_fp = None
-    for _ in range(max_iter):
+    def step(e: DataFrame, n: int) -> DataFrame:
         # --- large-star over e: key = each endpoint (symmetric view);
         # hang every strictly-larger neighbor onto min(Γ(a) ∪ a) ----------
         sym = e.select(
@@ -207,7 +151,7 @@ def connected_components_star(
             F.least(F.col("u"), F.col("v")).alias("b"),
         )
         m2 = F.min("b").over(Window.partitionBy("a"))  # b < a always
-        new_e = (
+        return (
             keyed.withColumn("m", m2)
             .select(
                 F.explode(
@@ -220,15 +164,16 @@ def connected_components_star(
             .select(F.col("s.x").alias("u"), F.col("s.y").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-        new_fp = new_e.agg(fingerprint).collect()[0][0]
-        if prev_fp is None:
-            prev_fp = e.agg(fingerprint).collect()[0][0]
-        e = new_e
-        if new_fp == prev_fp:
-            break
-        prev_fp = new_fp
+
+    e = fixpoint(
+        "connected_components_star",
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
+        step,
+        max_iter,
+    )
 
     # Fixpoint edges are (vertex, root): root < vertex everywhere. Labels =
     # edge map ∪ roots ∪ isolated vertices (their own singletons).

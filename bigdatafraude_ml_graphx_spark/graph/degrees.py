@@ -45,49 +45,24 @@ def k_core(edges, k: int, max_rounds: int = 50):
     WITHIN the core.
 
     Per round: one degree aggregate + two semi joins on the (shrinking)
-    edge list, ``localCheckpoint`` lineage truncation, two-scalar
-    convergence fingerprint — the components/bfs discipline. Rounds =
-    peeling depth (≤ graph degeneracy ordering length), usually far
-    below the vertex count; a round that removes nothing is the
-    fixpoint. Budgets EFFECTIVE rounds (the confirming no-change round
-    is free); raises if the budget is exhausted mid-peel.
+    edge list, run to fixpoint by ``fixpoint.fixpoint``. Rounds = peeling
+    depth (≤ graph degeneracy ordering length), usually far below the
+    vertex count; a round that removes nothing is the fixpoint. Raises if
+    ``max_rounds`` peeling rounds leave edges still to peel.
     """
-    from pyspark.sql import functions as F
-
     from .builders import symmetrize
+    from .fixpoint import fixpoint
 
-    # Lazy too: round 1's fingerprint aggregate materializes it (no
-    # dedicated init job).
-    sym = symmetrize(edges).select("src", "dst").localCheckpoint(eager=False)
-    prev = None
-    changes = 0
-    while True:
+    def step(sym: DataFrame, n: int) -> DataFrame:
         deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
-        new = (
-            sym.join(keep, "src", "left_semi")
-            .join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            )
-            # LAZY: the fingerprint aggregate below materializes the
-            # checkpoint — one job per peel round instead of two (r14,
-            # the components.py r13 fusion; truncation unchanged).
-            .localCheckpoint(eager=False)
+        return sym.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
-        row = new.agg(
-            F.count("*").alias("n"), F.sum(F.col("src") + F.col("dst")).alias("s")
-        ).collect()[0]
-        fp = (row["n"], row["s"])
-        sym = new
-        if fp == prev:
-            break
-        changes += 1
-        if changes > max_rounds:
-            raise RuntimeError(
-                f"k_core: peeling did not stabilize within "
-                f"max_rounds={max_rounds}; raise the budget."
-            )
-        prev = fp
+
+    sym = fixpoint(
+        "k_core", symmetrize(edges).select("src", "dst"), step, max_rounds
+    )
     return sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("core_degree")
     )

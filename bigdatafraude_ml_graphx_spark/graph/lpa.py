@@ -13,7 +13,7 @@ that library).
 
 Scale shape per round: one join of the label table against the
 symmetrized edges, materialized once and keyed on src
-(``pagerank._iteration_edges``) — the count per (vertex, label) combines
+(``fixpoint._iteration_edges``) — the count per (vertex, label) combines
 little map-side, and keyed edges let it and the window below run with no
 edge-sized exchange; one count aggregate; one per-vertex window over
 that vertex's candidate labels only (bounded by its degree), then ``localCheckpoint``
@@ -33,7 +33,7 @@ from .builders import symmetrize
 def label_propagation(edges: DataFrame, num_iterations: int = 3) -> DataFrame:
     """Synchronous min-tie LPA over the undirected graph of ``edges``
     (src, dst) → ``(id, label)`` after ``num_iterations`` rounds."""
-    from .pagerank import _iteration_edges
+    from .fixpoint import _iteration_edges
 
     sym = _iteration_edges(symmetrize(edges).select("src", "dst"), key="src")
     labels = (

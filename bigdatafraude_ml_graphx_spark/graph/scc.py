@@ -17,8 +17,8 @@ without pivot sampling, made deterministic with MIN labels):
        backward walk), so SCC(v) = r exactly;
     4. remove assigned vertices and iterate on the remainder.
 
-  Every phase is joins + aggregates with per-round ``localCheckpoint``
-  lineage truncation (the components/pagerank/bfs discipline); per-phase
+  Every phase is joins + aggregates, each propagation run to fixpoint by
+  ``fixpoint.fixpoint``; per-phase
   state is one (id, color) row per remaining vertex. Worst case is
   O(#SCC-levels) phases (a path of SCCs), the known bound for
   pivot/coloring SCC — the same worst case GraphX's implementation has.
@@ -35,56 +35,23 @@ from pyspark.sql import functions as F
 
 
 def _min_label_fixpoint(
-    edges: DataFrame, labels: DataFrame, max_rounds: int, n_labels: int = 0
+    edges: DataFrame, labels: DataFrame, max_rounds: int
 ) -> DataFrame:
     """Propagate MIN ``label`` along directed ``edges`` (src → dst) to
     fixpoint: returns (id, label) with label = min over {label(u): u
-    reaches id} ∪ {label(id)}. ``n_labels``, when the caller knows it,
-    is the label-table row count (it is invariant across rounds — the
-    groupBy keys on the same vertex set) and enables the state broadcast
-    from round 1."""
-    from .pagerank import _maybe_broadcast
+    reaches id} ∪ {label(id)}."""
+    from .fixpoint import _maybe_broadcast, fixpoint
 
-    # ``max_rounds`` budgets EFFECTIVE rounds (rounds that change the
-    # labeling); the no-change round confirming the fixpoint is free, so
-    # a budget equal to the exact propagation depth succeeds.
-    prev = None
-    changes = 0
-    n_rows = n_labels
-    while True:
-        # Broadcast the (checkpoint-hidden) label state into the edge list
-        # while it is measurably small — the per-round |E|-side Exchange
-        # disappears (q23/_maybe_broadcast discipline; the fingerprint
-        # aggregate supplies the row count from round 1 onward).
-        lb = _maybe_broadcast(labels, n_rows, 2_000_000)
-        cand = (
-            lb.join(edges, lb.id == edges.src)
-            .select(F.col("dst").alias("id"), "label")
+    def step(labels: DataFrame, n: int) -> DataFrame:
+        lb = _maybe_broadcast(labels, n)
+        cand = lb.join(edges, lb.id == edges.src).select(
+            F.col("dst").alias("id"), "label"
         )
-        labels = (
-            labels.unionByName(cand)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            # LAZY: the fingerprint aggregate below is the materializing
-            # action — one job per round instead of two (r14 fusion, the
-            # components.py r13 pattern; lineage truncation unchanged).
-            .localCheckpoint(eager=False)
+        return labels.unionByName(cand).groupBy("id").agg(
+            F.min("label").alias("label")
         )
-        row = labels.agg(
-            F.count("*").alias("n"), F.sum("label").alias("s")
-        ).collect()[0]
-        fp = (row["n"], row["s"])
-        n_rows = row["n"]
-        if fp == prev:
-            return labels
-        changes += 1
-        if changes > max_rounds:
-            raise RuntimeError(
-                f"scc: min-label propagation did not reach fixpoint within "
-                f"max_rounds={max_rounds} — the remaining diameter exceeds "
-                f"the budget; raise max_rounds."
-            )
-        prev = fp
+
+    return fixpoint("strongly_connected_components", labels, step, max_rounds)
 
 
 def strongly_connected_components(
@@ -97,13 +64,14 @@ def strongly_connected_components(
     outer phases don't assign every vertex (the bfs non-convergence
     contract — a truncated answer would silently diverge from the
     mutual-reachability oracle)."""
-    # Job-fusion discipline throughout the phase loop (r14, the
-    # components.py r13 pattern): every per-phase localCheckpoint is LAZY
-    # and the next scalar action (a count(), or the fixpoint's first
-    # fingerprint aggregate) is what materializes it — the eager-checkpoint
-    # job + isEmpty job pairs collapse into single count jobs. Lineage
-    # truncation is unchanged: blocks are saved by the materializing
-    # action, and every later consumer reads them.
+    # The edge frames the min-label fixpoints iterate over are eager
+    # checkpoints (``_iteration_edges``): a job saves only the lazy
+    # checkpoints nearest its output, and the fixpoint's jobs end at its
+    # own state. Every other per-phase frame is a lazy checkpoint that the
+    # next action reading it saves: the remaining-vertex count, or the
+    # caller's action on the returned union.
+    from .fixpoint import _iteration_edges
+
     remaining_edges = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
     remaining = (
         remaining_edges.select(F.col("src").alias("id"))
@@ -133,19 +101,15 @@ def strongly_connected_components(
         n_remaining = remaining.count()
         if n_remaining == 0:
             break
-        remaining_edges = (
+        remaining_edges = _iteration_edges(
             remaining_edges.join(remaining, remaining_edges.src == remaining.id, "left_semi")
             .join(remaining, remaining_edges.dst == remaining.id, "left_semi")
-            .localCheckpoint(eager=False)
         )
-        # 2. forward MIN coloring to fixpoint (one label row per remaining
-        # vertex — n_remaining arms the state broadcast from round 1).
+        # 2. forward MIN coloring to fixpoint.
         init = remaining.select("id", F.col("id").alias("label"))
-        colors = _min_label_fixpoint(
-            remaining_edges, init, max_rounds, n_labels=n_remaining
-        )
+        colors = _min_label_fixpoint(remaining_edges, init, max_rounds)
         # 3. backward walk from roots inside same-color edges.
-        ec = (
+        ec = _iteration_edges(
             remaining_edges.join(
                 colors.select(F.col("id").alias("src"), F.col("label").alias("c_src")),
                 "src",
@@ -156,7 +120,7 @@ def strongly_connected_components(
             )
             .filter(F.col("c_src") == F.col("c_dst"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))  # reversed
-        ).localCheckpoint(eager=False)
+        )
         roots = colors.filter(F.col("id") == F.col("label")).select("id")
         member = roots.select("id", F.col("id").alias("label"))
         # backward min-label propagation restricted to same-color edges:

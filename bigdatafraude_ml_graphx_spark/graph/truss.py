@@ -4,15 +4,13 @@ network analysis") — the edge-centric cousin of k-core and the standard
 community-core / fraud-ring detector (a dense collusive cluster keeps its
 edges; bridges and stars peel away).
 
-Iterative peel with the repo's fixpoint contract (graph/degrees.py::k_core
-discipline): per round, every surviving canonical edge (u < v) counts its
-support (= triangles containing it) via the COMPACT-FORWARD incidence
-enumeration (triangles.triangle_edge_incidences — hub wedge fan-out
-bounded O(√E), unlike a symmetric-adjacency self-join whose hot key grows
-as degree²), under-supported edges drop, lineage truncates with
-localCheckpoint, and a
-scalar edge-count fingerprint detects the fixpoint; a round budget raises
-loudly instead of returning a truncated truss. Deleting under-supported
+Iterative peel run to fixpoint by ``fixpoint.fixpoint``: per round, every
+surviving canonical edge (u < v) counts its support (= triangles
+containing it) via the COMPACT-FORWARD incidence enumeration
+(triangles.triangle_edge_incidences — hub wedge fan-out bounded O(√E),
+unlike a symmetric-adjacency self-join whose hot key grows as degree²) and
+under-supported edges drop; a round budget raises loudly instead of
+returning a truncated truss. Deleting under-supported
 edges is idempotent at the fixpoint, so the DuckDB oracle unrolls the same
 peel a fixed number of rounds (any depth ≥ the true peel depth is exact —
 the q149 MATERIALIZED-unroll technique).
@@ -51,38 +49,25 @@ def k_truss(
     final-truss support. ``k >= 3``; raises on round-budget exhaustion."""
     if k < 3:
         raise ValueError("k-truss requires k >= 3")
-    # LAZY checkpoints throughout the peel (r14 job fusion, the
-    # components.py r13 pattern): each round's ec.count() is the action
-    # that materializes the previous round's checkpoint — one job per
-    # round instead of two. Lineage truncation is unchanged.
-    ec = (
+    from .fixpoint import fixpoint
+
+    def step(ec: DataFrame, n: int) -> DataFrame:
+        return (
+            ec.join(_support(ec), ["u", "v"], "left_outer")
+            .filter(F.coalesce("support", F.lit(0)) >= k - 2)
+            .select("u", "v")
+        )
+
+    ec = fixpoint(
+        "k_truss",
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        step,
+        max_rounds,
     )
-    prev = None
-    for _ in range(max_rounds):
-        n = ec.count()
-        if prev == n:
-            break
-        prev = n
-        if n == 0:
-            break
-        supp = _support(ec)
-        ec = (
-            ec.join(supp, ["u", "v"], "left_outer")
-            .filter(F.coalesce("support", F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-    else:
-        raise RuntimeError(
-            f"k_truss: no fixpoint within max_rounds={max_rounds} — "
-            "raise the budget."
-        )
     if ec.isEmpty():
         id_t = edges.schema["src"].dataType.simpleString()
         return edges.sparkSession.createDataFrame(

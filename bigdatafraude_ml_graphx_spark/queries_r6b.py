@@ -349,7 +349,7 @@ def q168_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    from .graph.pagerank import _iteration_edges
+    from .graph.fixpoint import _iteration_edges
 
     # The adjacency is joined at EVERY walk step: materialize it once, keyed
     # on the per-step join key (_iteration_edges) — one setup shuffle; the

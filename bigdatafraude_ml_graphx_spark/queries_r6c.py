@@ -56,7 +56,7 @@ def q175_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     and takes MAX(d) — exponential as a plan, exact as a spec; the
     engine's relaxation is the plan that survives 100×."""
     from .graph import cooccurrence_edges
-    from .graph.pagerank import _iteration_edges, _maybe_broadcast
+    from .graph.fixpoint import _iteration_edges, _maybe_broadcast
 
     ev = load_table(spark, sf_dir, "events")
     # The edge list is joined every round: materialize it once, keyed on
@@ -83,7 +83,7 @@ def q175_dag_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not the full level table — against the persisted edges.
     frontier = levels
     for _ in range(_LEVEL_MAX_ROUNDS):
-        fr = _maybe_broadcast(frontier, nv, 2_000_000)
+        fr = _maybe_broadcast(frontier, nv)
         cand = (
             e.join(fr, e.src == fr.id)
             .select(F.col("dst").alias("id"), (F.col("level") + 1).alias("lv"))

@@ -276,18 +276,52 @@ def test_scc_matches_tarjan_on_random_digraphs(spark):
         assert got == ref, f"trial {trial}"
 
 
-def test_scc_known_shapes(spark):
+@pytest.mark.parametrize("vid", [int, "v{}".format], ids=["long", "string"])
+def test_scc_known_shapes(spark, vid):
     from bigdatafraude_ml_graphx_spark.graph.scc import (
         strongly_connected_components,
     )
 
     # two cycles bridged by a DAG edge + a tail
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (3, 4), (5, 6), (7, 1)],
+        [(vid(a), vid(b)) for a, b in
+         [(1, 2), (2, 3), (3, 1), (4, 5), (5, 4), (3, 4), (5, 6), (7, 1)]],
         ["src", "dst"],
     )
     got = sorted((r.id, r.scc) for r in strongly_connected_components(edges).collect())
-    assert got == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6), (7, 7)]
+    assert got == [
+        (vid(a), vid(b))
+        for a, b in [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6), (7, 7)]
+    ]
+
+
+def test_connected_components_raise_when_rounds_run_out(spark):
+    """A 13-vertex chain needs 12 label-changing rounds: a budget of 5
+    must raise instead of returning partly propagated labels, and a budget
+    of exactly 12 succeeds (the confirming round is free)."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="connected_components: .* budget of 5 "):
+        connected_components(edges, max_iter=5)
+    comp = {r.id: r.component for r in connected_components(edges, max_iter=12).collect()}
+    assert comp == {i: 0 for i in range(13)}
+
+
+def test_connected_components_star_raises_when_rounds_run_out(spark):
+    from bigdatafraude_ml_graphx_spark.graph.components import (
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "src long, dst long"
+    )
+    with pytest.raises(
+        RuntimeError, match="connected_components_star: .* budget of 1 "
+    ):
+        connected_components_star(edges, max_iter=1)
+    comp = {r.id: r.component for r in connected_components_star(edges).collect()}
+    assert comp == {i: 0 for i in range(13)}
 
 
 def test_shortest_paths_budget_equal_to_diameter_succeeds(spark):
@@ -331,18 +365,22 @@ def test_per_vertex_triangles_match_bruteforce(spark):
     assert got == expect
 
 
-def test_kcore_peels_to_maximal_subgraph(spark):
+@pytest.mark.parametrize("vid", [int, "v{}".format], ids=["long", "string"])
+def test_kcore_peels_to_maximal_subgraph(spark, vid):
     from bigdatafraude_ml_graphx_spark.graph.degrees import k_core
 
     # triangle + tail: 2-core = triangle; chain peels entirely
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)], ["src", "dst"]
+        [(vid(a), vid(b)) for a, b in
+         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)]],
+        ["src", "dst"],
     )
     got = {(r.id, r.core_degree) for r in k_core(edges, 2).collect()}
-    assert got == {(1, 2), (2, 2), (3, 2)}
+    assert got == {(vid(1), 2), (vid(2), 2), (vid(3), 2)}
     # 4-clique survives its own 3-core; pendant vertex peels
     e2 = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
+        [(vid(a), vid(b)) for a, b in
+         [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]],
         ["src", "dst"],
     )
     assert k_core(e2, 3).count() == 4
@@ -458,7 +496,7 @@ def edge_layouts(monkeypatch):
     import importlib
 
     # (``graph.pagerank`` the attribute is the function, not the module)
-    pr_mod = importlib.import_module("bigdatafraude_ml_graphx_spark.graph.pagerank")
+    pr_mod = importlib.import_module("bigdatafraude_ml_graphx_spark.graph.fixpoint")
     real = pr_mod._iteration_edges
     keyed: list[bool] = []
 
@@ -574,7 +612,7 @@ def test_operators_edge_layout_matches_references(
 def test_iteration_edges_layout_plans(spark, dense):
     """The unkeyed layout holds no Exchange and no cached copy over the
     edges; the keyed one is a repartition on the key, persisted."""
-    from bigdatafraude_ml_graphx_spark.graph.pagerank import _iteration_edges
+    from bigdatafraude_ml_graphx_spark.graph.fixpoint import _iteration_edges
 
     flat = _iteration_edges(symmetrize(dense))
     plan = _plan(flat)
@@ -586,3 +624,63 @@ def test_iteration_edges_layout_plans(spark, dense):
     assert "InMemoryRelation" in plan and "Exchange" in plan
     assert keyed.count() == 2 * len(_DENSE_EDGES)
     keyed.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Jobs per round: each round's checkpoint is saved by the round's own job
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "shuffle"])
+def test_one_job_per_round(spark, monkeypatch, broadcast):
+    """Each round of CC, BFS and PageRank runs one job: the action that
+    materializes, and so saves, the round's checkpoint. A state broadcast
+    into the edge join adds its build job (CC, BFS); PageRank's build IS
+    its round's job, so with the broadcast threshold at 0 its rounds need
+    eager checkpoints, or they all run inside the last round's job.
+
+    Counted as the difference in jobs between two calls whose inputs are
+    two rounds apart. AQE is off while counting: it submits every exchange
+    as a job of its own, which would hide the per-round actions."""
+    import uuid
+
+    from bigdatafraude_ml_graphx_spark.graph import fixpoint as fx
+    from bigdatafraude_ml_graphx_spark.graph.bfs import shortest_paths
+
+    if not broadcast:
+        monkeypatch.setattr(fx, "_BROADCAST_ROWS", 0)
+    sc = spark.sparkContext
+
+    def jobs(call, rounds) -> int:
+        group = f"jobs-per-round-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            call(rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def per_round(call) -> float:
+        return (jobs(call, 5) - jobs(call, 3)) / 2
+
+    def chain(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n)], "src long, dst long"
+        )
+
+    landmark = spark.createDataFrame([(0,)], "id long")
+    weighted = spark.createDataFrame(
+        _sym_weighted([(i, i + 1) for i in range(6)]),
+        "src long, dst long, weight double",
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        cc = per_round(lambda n: connected_components(chain(n)))
+        bfs = per_round(lambda n: shortest_paths(chain(n), landmark))
+        pr = per_round(lambda n: pagerank(weighted, max_iter=n))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    state_broadcast = 1 if broadcast else 0
+    assert (cc, bfs, pr) == (1 + state_broadcast, 1 + state_broadcast, 1)
