@@ -128,13 +128,20 @@ def update_cluster_labels(
     composes losslessly (pinned across a 3-day split in
     tests/test_round13.py).
 
-    Scale shape: work ∝ |batch| × collision rate (the probe join) +
-    |touched clusters| (the subgraph CC) + one slim anti join over the
-    labeling; the corpus-sized document table is scanned only to shingle
-    the base posting lists — at 100 TB those are a standing artifact
-    maintained at ingest (see ``ngram_jaccard_probe_pairs``), and the
-    bench's ``x_ngram_probe_standing_b*`` rows measure exactly that
-    amortized shape.
+    Scale shape: each call still shingles the whole ``base`` once, in one
+    map-side pass into a local checkpoint — at 100 TB the posting lists
+    are a standing artifact maintained at ingest, which that pass stands
+    in for (see ``ngram_jaccard_probe_pairs``; the bench's
+    ``x_ngram_probe_standing_b*`` rows measure the amortized shape). The
+    base's shingle rows never cross an exchange: the batch's capped
+    shingles are broadcast into the base scan (join work ∝ |batch| ×
+    collision rate), and the base side shuffles only map-side-combined
+    counts (hot list, per-doc sizes, shared counts), which still grow
+    with the base's distinct shingles and docs. A base scan narrower than
+    the cluster is also spread by doc id before shingling (the
+    scan-parallelism floor of ``_doc_shingles``), a shuffle of the base
+    text. The rest is |touched clusters| (the subgraph CC) plus one slim
+    anti join over the labeling.
     """
     from ..graph.components import connected_components
     from .ngram import ngram_jaccard_probe_pairs

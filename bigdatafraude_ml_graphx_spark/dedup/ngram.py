@@ -320,47 +320,55 @@ def ngram_jaccard_probe_pairs(
     maintenance unions into the standing dup graph (q265). The extra
     self-join runs on the BATCH-sized shingle frame only.
 
-    Same eager + non-recoverable cache-hygiene contract as
-    ``ngram_jaccard_pairs`` (result and shingle inputs
-    ``localCheckpoint``-ed — no CacheManager entries).
+    Plan: the index side never crosses an exchange keyed on ``shingle``.
+    Its (doc, shingle) stream is materialized once, map-side, by one eager
+    ``localCheckpoint``; the hot-list aggregate, the per-doc sizes and the
+    pair join all read that checkpoint. The capped probe frame is
+    broadcast into the index scan (:func:`graph.fixpoint._maybe_broadcast`
+    on the probe's measured row count, which bounds the capped frame), so
+    the only index-side shuffles are map-side-combined aggregates (hot
+    list, sizes, shared counts). Past the broadcast threshold the hint
+    does not fire and AQE plans the shuffle join. The hot list is
+    broadcast into both anti joins the same way.
+
+    Eager + non-recoverable: every intermediate is a ``localCheckpoint``
+    and the result is materialized before returning, so the call leaves
+    no CacheManager entry; executor loss invalidates the returned frame.
     """
-    # Key-partitioned + persisted sides (the _keyed_capped_shingles shape):
-    # each side's repartition(shingle) Exchange is the sharing point — its
-    # map side (the tokenize pipeline) runs once per query even when
-    # consumer stages race the persist cache — and the established hash
-    # partitioning lets the probe⋈index shingle join, the within-probe
-    # self-join, and the per-shingle df aggregate all fuse with no further
-    # Exchange, parts-way parallel.
-    sh_p = _doc_shingles(probe, text_col, id_col, n).repartition(
-        F.col("shingle")
-    ).persist()
-    sh_i = _doc_shingles(index, text_col, id_col, n).repartition(
-        F.col("shingle")
-    ).persist()
+    from ..graph.fixpoint import _maybe_broadcast
+
+    sh_i = _doc_shingles(index, text_col, id_col, n).localCheckpoint(eager=True)
+    # Saved by the count, which also bounds the capped probe's rows.
+    sh_p = _doc_shingles(probe, text_col, id_col, n).localCheckpoint(eager=False)
+    n_p = sh_p.count()
+    cap_p, cap_i = sh_p, sh_i
     if max_shingle_freq is not None:
         # Hot list over the COMBINED universe (df counts probe and index
         # docs alike) — exactly the self-join's drop_hot_buckets semantics
-        # over probe ∪ index. The list is tiny by construction
-        # (≤ |rows|/cap keys); eager checkpoint so the union aggregate runs
-        # once, then both anti joins broadcast it.
+        # over probe ∪ index. Broadcast on its measured size so the anti
+        # join filters the index checkpoint in place.
         hot = (
             sh_i.unionByName(sh_p)
             .groupBy("shingle")
             .agg(F.count("*").alias("_bn"))
             .filter(F.col("_bn") > max_shingle_freq)
             .select("shingle")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        cap_p = sh_p.join(hot, ["shingle"], "left_anti")
-        cap_i = sh_i.join(hot, ["shingle"], "left_anti")
-    else:
-        cap_p, cap_i = sh_p, sh_i
+        n_hot = hot.count()
+        # An empty list filters nothing; unhinted (_maybe_broadcast skips
+        # 0 rows), its anti join would shuffle the index on the shingle.
+        if n_hot:
+            hot = _maybe_broadcast(hot, n_hot)
+            cap_p = sh_p.join(hot, ["shingle"], "left_anti")
+            cap_i = sh_i.join(hot, ["shingle"], "left_anti")
+    bp = _maybe_broadcast(cap_p, n_p)
     sizes_p = cap_p.groupBy("doc").agg(F.count("*").alias("n_p"))
     sizes_i = cap_i.groupBy("doc").agg(F.count("*").alias("n_i"))
     shared = (
-        cap_p.alias("p")
+        cap_i.alias("i")
         .join(
-            cap_i.alias("i"),
+            bp.alias("p"),
             (F.col("p.shingle") == F.col("i.shingle"))
             & (F.col("p.doc") != F.col("i.doc")),
         )
@@ -388,7 +396,7 @@ def ngram_jaccard_probe_pairs(
         wshared = (
             cap_p.alias("x")
             .join(
-                cap_p.alias("y"),
+                bp.alias("y"),
                 (F.col("x.shingle") == F.col("y.shingle"))
                 & (F.col("x.doc") < F.col("y.doc")),
             )
@@ -421,10 +429,7 @@ def ngram_jaccard_probe_pairs(
             .select("doc_probe", "doc_index", "jaccard")
         )
         cross = cross.unionByName(within)
-    pairs = cross.localCheckpoint(eager=True)
-    sh_p.unpersist()
-    sh_i.unpersist()
-    return pairs
+    return cross.localCheckpoint(eager=True)
 
 
 def containment_pairs(

@@ -57,11 +57,15 @@ def q264_standing_labels_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's LOCATION outlives the session catalog, so a fixed name
     collides with a previous session's run. The name of the most recent
     build is exposed as ``q264_standing_labels_report.last_table`` for
-    the plan test."""
+    the plan test; each call drops the previous call's table first, so
+    one build per session stays live."""
     import uuid
 
     from .dedup.clusters import cluster_labels
 
+    prev = getattr(q264_standing_labels_report, "last_table", None)
+    if prev is not None:
+        spark.sql(f"DROP TABLE IF EXISTS {prev}")
     docs = load_table(spark, sf_dir, "documents")
     cap = _DF_FRAC * docs.count()
     name = f"q264_labels_{uuid.uuid4().hex[:8]}"

@@ -99,6 +99,125 @@ def test_probe_pairs_uncapped_equivalence(spark, sf_dir):
     assert want and got == want
 
 
+# A cap low enough that the sf0.001 fixture has hot shingles (document
+# frequency above 4), so the hot-list anti joins are in the plan.
+_HOT_CAP = 4
+
+
+def _shuffles_during(spark, fn):
+    """Run ``fn()``; return its result and the ``Input``/``Arguments`` text
+    of every shuffle Exchange in the physical plans (final adaptive plans
+    included) of the SQL executions it ran, read from the SQL status
+    store."""
+    import re
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = int(store.executionsCount())
+    last = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    out = fn()
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    found = []
+    for i in reversed(range(execs.size())):
+        ex = execs.apply(i)
+        if ex.executionId() <= last:
+            break
+        for block in ex.physicalPlanDescription().split("\n\n"):
+            lines = block.strip().splitlines()
+            if lines and re.fullmatch(r"\(\d+\) Exchange", lines[0]):
+                found.append(" ".join(lines[1:]))
+    return out, found
+
+
+def _shingle_row_shuffles(exchanges):
+    """Exchanges that move (doc, shingle) rows keyed on the shingle — the
+    layout a shuffle join on the shingle needs. Partial aggregates keyed on
+    the shingle (the hot list's df counts) carry no doc column."""
+    return [
+        e for e in exchanges
+        if "hashpartitioning(shingle#" in e and "doc#" in e.split("Arguments")[0]
+    ]
+
+
+def _probe_split(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    is_batch = F.col("doc_id") % _MOD == 0
+    return docs, docs.filter(is_batch), docs.filter(~is_batch)
+
+
+def test_probe_pairs_broadcast_moves_no_shingle_rows(spark, sf_dir):
+    """A probe that fits a broadcast is joined into the index scan: no
+    exchange of the call moves (doc, shingle) rows on the shingle — only
+    map-side-combined aggregates cross the network. Every intermediate is
+    a localCheckpoint, so the call leaves no CacheManager entry."""
+    _, batch, base = _probe_split(spark, sf_dir)
+    spark.catalog.clearCache()
+    pairs, exchanges = _shuffles_during(
+        spark,
+        lambda: ngram_jaccard_probe_pairs(
+            batch, base, n=3, threshold=_JACC_TAU,
+            max_shingle_freq=_HOT_CAP, within_probe=True,
+        ),
+    )
+    assert exchanges, "the status store must show the call's plans"
+    assert _shingle_row_shuffles(exchanges) == [], exchanges
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert pairs.count() > 0
+
+
+def test_probe_pairs_shuffle_fallback_equal(spark, sf_dir, monkeypatch):
+    """Past the broadcast threshold (forced to 0 here, with the planner's
+    own size-based broadcast off) the join is a shuffle join on the
+    shingle; the pairs are identical to the broadcast path's and to the
+    capped self-join's cross pairs."""
+    from bigdatafraude_ml_graphx_spark.graph import fixpoint
+
+    docs, batch, base = _probe_split(spark, sf_dir)
+
+    def call():
+        return sorted(
+            map(
+                tuple,
+                ngram_jaccard_probe_pairs(
+                    batch, base, n=3, threshold=_JACC_TAU,
+                    max_shingle_freq=_HOT_CAP,
+                ).collect(),
+            )
+        )
+
+    broadcast = call()
+    monkeypatch.setattr(fixpoint, "_BROADCAST_ROWS", 0)
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        shuffled, exchanges = _shuffles_during(spark, call)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert _shingle_row_shuffles(exchanges), exchanges
+    assert shuffled == broadcast
+
+    want = []
+    for r in ngram_jaccard_pairs(
+        docs, n=3, threshold=_JACC_TAU, max_shingle_freq=_HOT_CAP
+    ).collect():
+        a_in = r["doc_a"] % _MOD == 0
+        if a_in != (r["doc_b"] % _MOD == 0):
+            a, b = (r["doc_a"], r["doc_b"]) if a_in else (r["doc_b"], r["doc_a"])
+            want.append((a, b, r["jaccard"]))
+    assert want and broadcast == sorted(want)
+
+
 def _decisions(spark, batch_docs, base_docs, cap):
     """q263's decision logic over an explicit (batch, base) split — the
     exact+capped-Jaccard probe a daily loop runs per ingested partition."""
@@ -262,6 +381,31 @@ def test_q264_reads_back_standing_table_and_matches_q255(spark, sf_dir):
         assert "Exchange" not in full[:first_agg], full
     finally:
         if name:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_q264_keeps_one_labels_table_per_session(spark, sf_dir):
+    """Each q264 build drops the previous call's uuid-named table, so two
+    calls leave one ``q264_labels_*`` table in the catalog, not two."""
+    from bigdatafraude_ml_graphx_spark.queries_r13 import (
+        q264_standing_labels_report,
+    )
+
+    def q264_tables():
+        return {
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("q264_labels_")
+        }
+
+    before = q264_tables()
+    names = []
+    try:
+        for _ in range(2):
+            q.QUERIES["q264_standing_labels_report"](spark, sf_dir).collect()
+            names.append(q264_standing_labels_report.last_table)
+        assert q264_tables() - before == {names[-1]}
+    finally:
+        for name in names:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
